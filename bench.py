@@ -71,11 +71,9 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     shuffle_bytes: dict[str, int] = {}
-    # r12: raw per-run samples are recorded next to the medians in
-    # BENCH_DETAIL.json so FIRST-RUN costs stay visible — queries with
-    # a process-lifetime model cache (the PQ/IVF codebook, the graph
-    # edge list) pay training/build on run 1 only, and a median alone
-    # would hide that cost (r11 verdict "what's wrong #1"). Headline
+    # raw per-run samples are recorded next to the medians in
+    # BENCH_DETAIL.json so a run-1 cost that later runs skip (JVM
+    # warm-up, codegen) stays visible beside the median. Headline
     # numbers and the stdout line are unchanged.
     raw_samples: dict[str, list[float]] = {}
     for name in sorted(specs):

@@ -485,26 +485,11 @@ def q_text_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BM25_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc BM25 sums for ``_BM25_TERMS``: (doc_id, n_terms,
     bm25_micro), unordered — shared by ``q_text_bm25`` and the hybrid
     retrieval fusion (``operators/retrieval.py``). Mirrors the SQL in
-    ``BM25_CTES`` operation-for-operation.
-
-    Memoized per (session, sf_dir) behind a localCheckpoint — the
-    token-stream aggregations are the dominant cost and the output is
-    only matching-doc-sized (docs containing a query term), so the
-    materialization is bounded by the posting lists, not the corpus
-    (the ER-closure memo discipline, `relational.py:_er_labels`).
-    Keyed on applicationId (not id(spark), which CPython can reuse
-    after a stopped session is GC'd)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _BM25_CACHE.get(key)
-    if cached is not None:
-        return cached
+    ``BM25_CTES`` operation-for-operation."""
     t = _tokens(spark, sf_dir).select("doc_id", "token")
     dl = t.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     tot = dl.agg(
@@ -535,12 +520,10 @@ def bm25_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .select("doc_id", term_micro.alias("term_micro"))
     )
-    out = scored.groupBy("doc_id").agg(
+    return scored.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_terms"),
         F.sum("term_micro").cast("long").alias("bm25_micro"),
-    ).localCheckpoint()
-    _BM25_CACHE[key] = out
-    return out
+    )
 
 
 _SPAN_K = 8  # tokens per span

@@ -746,9 +746,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ER_LABEL_CACHE: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def _er_propagate(
     pairs: DataFrame, broadcast_labels: bool = True
 ) -> DataFrame:
@@ -790,20 +787,8 @@ def _er_propagate(
 
 def _er_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(n = member custkey, lbl = cluster min custkey) after the
-    blocked fuzzy match + ``_ER_ROUNDS`` min-label rounds.
-
-    Memoized per (session, sf_dir) behind a localCheckpoint — the
-    blocked levenshtein pair scan is the dominant cost and is shared
-    verbatim by ``q_entity_resolution`` and ``q_er_golden_record``
-    (and by repeated bench runs); materializing it once is the same
-    discipline as the PQ codebook memo (`vector.py:_pq_train`).
-    Keyed on applicationId, not id(spark): CPython reuses object ids
-    after GC, which could hand a new session a checkpointed frame
-    bound to a dead SparkContext."""
-    key = (spark.sparkContext.applicationId, sf_dir, "nation")
-    cached = _ER_LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
+    blocked fuzzy match + ``_ER_ROUNDS`` min-label rounds, shared by
+    ``q_entity_resolution`` and ``q_er_golden_record``."""
     c = load_table(spark, sf_dir, "customer")
     a = c.select(
         F.col("c_custkey").alias("a"),
@@ -821,9 +806,7 @@ def _er_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.levenshtein("name_a", "name_b") <= 2)
         .select("a", "b")
     )
-    lbl = _er_propagate(pairs, broadcast_labels=True)
-    _ER_LABEL_CACHE[key] = lbl
-    return lbl
+    return _er_propagate(pairs, broadcast_labels=True)
 
 
 def _er_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -884,19 +867,13 @@ def _er_snm_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _er_labels_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-label rounds over the SNM composite-block candidates —
-    the labels backing the _scaled ER queries. Same memo discipline
-    as ``_er_labels``; labels flow through hash joins (the candidate
-    graph is corpus-linear, so no broadcast hint)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "snm")
-    cached = _ER_LABEL_CACHE.get(key)
-    if cached is not None:
-        return cached
-    lbl = _er_propagate(
+    the labels backing the _scaled ER queries; labels flow through
+    hash joins (the candidate graph is corpus-linear, so no broadcast
+    hint)."""
+    return _er_propagate(
         _er_snm_pairs(spark, sf_dir).select("a", "b"),
         broadcast_labels=False,
     )
-    _ER_LABEL_CACHE[key] = lbl
-    return lbl
 
 
 @query("q_er_golden_record", oracle=_er_golden_sql())
@@ -1002,9 +979,7 @@ def q_er_golden_record_scaled(
     entity resolution (``q_entity_resolution_scaled``) — identical
     survivorship rules to ``q_er_golden_record``, only the candidate
     generation changes (N*w sorted-neighborhood candidates instead of
-    the block-quadratic nation join). Shares the memoized scaled
-    label frame, so running both _scaled queries costs one candidate
-    scan."""
+    the block-quadratic nation join)."""
     return _golden_record_from(
         _er_labels_scaled(spark, sf_dir), spark, sf_dir
     )

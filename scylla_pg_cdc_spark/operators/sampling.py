@@ -96,11 +96,26 @@ def q_train_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Row budget for broadcasting the eval side of a shingle join, sized
+# so ~64-byte shingles stay inside a ~300 MB executor broadcast.
+BROADCAST_ROW_BUDGET = 5_000_000
+
+
+def _eval_side(eval_sh: DataFrame, budget: int | None) -> DataFrame:
+    """``eval_sh`` hinted as the build side of its shingle join: a
+    broadcast while its row count is within ``budget`` (None skips the
+    count probe), a shuffled hash build past it — broadcasting an
+    over-budget side would OOM the executors."""
+    if budget is None or eval_sh.count() <= budget:
+        return F.broadcast(eval_sh)
+    return eval_sh.hint("shuffle_hash")
+
+
 def decontaminate(
     train_docs: DataFrame,
     eval_docs: DataFrame,
     k: int = 13,
-    broadcast_row_budget: int | None = 5_000_000,
+    broadcast_row_budget: int | None = BROADCAST_ROW_BUDGET,
 ) -> DataFrame:
     """Flag training docs sharing any k-token shingle with the eval
     set (the GPT-3/PaLM n-gram decontamination rule; k=13 is the
@@ -109,25 +124,20 @@ def decontaminate(
     Join-strategy switch (NEXT r2 #10): eval benchmarks are normally
     tiny, so the shingle semi join broadcasts the eval side. But "eval"
     can be a whole benchmark SUITE; once its distinct-shingle count
-    passes ``broadcast_row_budget`` (rows, sized so ~64-byte shingles
-    stay inside a ~300 MB executor broadcast), broadcasting would OOM
-    the executors — the plan switches to a shuffled hash semi join on
-    the shingle key. The count() probe runs one aggregation over the
-    SMALL side only; the 100 TB train side is never touched by the
-    probe. Pass ``broadcast_row_budget=None`` when the eval set is
-    known-small to skip the probe job entirely (the bench differ
-    showed the probe itself costs one extra shuffle of the eval
-    shingles)."""
+    passes ``broadcast_row_budget``, the plan switches to a shuffled
+    hash semi join on the shingle key (``_eval_side``). The count()
+    probe runs one aggregation over the SMALL side only; the 100 TB
+    train side is never touched by the probe. Pass
+    ``broadcast_row_budget=None`` when the eval set is known-small to
+    skip the probe job entirely (the bench differ showed the probe
+    itself costs one extra shuffle of the eval shingles)."""
     from scylla_pg_cdc_spark.operators.text import shingles
 
     eval_sh = shingles(eval_docs, k=k).select("shingle").distinct()
     train_sh = shingles(train_docs, k=k)
-    if broadcast_row_budget is None or eval_sh.count() <= broadcast_row_budget:
-        hit = train_sh.join(F.broadcast(eval_sh), "shingle", "left_semi")
-    else:
-        hit = train_sh.join(
-            eval_sh.hint("shuffle_hash"), "shingle", "left_semi"
-        )
+    hit = train_sh.join(
+        _eval_side(eval_sh, broadcast_row_budget), "shingle", "left_semi"
+    )
     dirty = (
         hit.select("doc_id")
         .distinct()
@@ -372,9 +382,11 @@ def q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     before trusting a benchmark number. Plan: eval shingles are the
     tiny side (2% hash slice) and join the training shingle stream;
     the per-(eval, train) hit pairs are bounded by shared shingles.
-    At 100 TB the eval side broadcasts, exactly like decontaminate.
+    The eval side broadcasts under the same row-budget guard as
+    decontaminate (``_eval_side``): an eval slice past
+    ``BROADCAST_ROW_BUDGET`` rows becomes a shuffled hash build.
 
-    r12 (guide §3.1/§2.3): ONE explicitly-ev-broadcast join feeds BOTH
+    r12 (guide §3.1/§2.3): ONE eval-side-build join feeds BOTH
     counts as countDistincts — n_leaked = distinct matched ev shingles
     (ev is already distinct per (doc, shingle), so this equals the old
     semi-join row count) and n_train_docs = distinct matched train
@@ -390,7 +402,7 @@ def q_contamination_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = shingles(bucketed.filter(F.col("bucket") >= 98), k=3)
     tr = shingles(bucketed.filter(F.col("bucket") < 98), k=3)
     tot = ev.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_shingles"))
-    m = F.broadcast(ev).join(
+    m = _eval_side(ev, BROADCAST_ROW_BUDGET).join(
         tr.select(F.col("shingle"), F.col("doc_id").alias("train_doc")),
         "shingle",
     )

@@ -183,9 +183,6 @@ def q_mad_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MAD_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-
-
 def _mad_frames(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -195,52 +192,40 @@ def _mad_frames(
     mad_cents). Exact lower-median order statistics on integer cents
     via the two-phase rank-select library.
 
-    The two rank-select passes (the expensive part) are memoized per
-    (session, sf_dir) behind localCheckpoints of the TINY med/mad
-    frames — the ER-closure/PQ-codebook memo discipline. The
-    corpus-sized dev frame is never materialized; it is re-derived
-    lazily from the cached 5-row median table. Keyed on applicationId
-    (not id(spark), which CPython can reuse after a session is GC'd)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _MAD_CACHE.get(key)
-    if cached is not None:
-        med, mad = cached
-    else:
-        ev = _event_cents(spark, sf_dir).select("event_type", "vc")
-        med = rank_select_percentiles(
-            ev,
-            "event_type",
-            "vc",
-            [("med", "(n + 1) DIV 2")],
-            bucket_width=1_000,
-            checkpoint=False,
-        ).select(
-            "event_type",
-            F.col("n").alias("n"),
-            F.col("med").alias("median_cents"),
-        ).localCheckpoint()
-        dev0 = ev.join(F.broadcast(med), "event_type").select(
-            "event_type",
-            F.abs(F.col("vc") - F.col("median_cents")).alias("dv"),
-        )
-        mad = rank_select_percentiles(
-            dev0,
-            "event_type",
-            "dv",
-            [("mad", "(n + 1) DIV 2")],
-            bucket_width=1_000,
-            checkpoint=False,
-        ).select(
-            "event_type", F.col("mad").alias("mad_cents")
-        ).localCheckpoint()
-        _MAD_CACHE[key] = (med, mad)
+    The TINY med/mad frames are localCheckpointed: med feeds both the
+    MAD pass and the returned dev frame, so the checkpoint keeps its
+    rank-select pass from running twice in one call. The corpus-sized
+    dev frame is never materialized; it is derived lazily from the
+    checkpointed 5-row median table."""
     ev = _event_cents(spark, sf_dir).select("event_type", "vc")
+    med = rank_select_percentiles(
+        ev,
+        "event_type",
+        "vc",
+        [("med", "(n + 1) DIV 2")],
+        bucket_width=1_000,
+        checkpoint=False,
+    ).select(
+        "event_type",
+        F.col("n").alias("n"),
+        F.col("med").alias("median_cents"),
+    ).localCheckpoint()
     dev = ev.join(F.broadcast(med), "event_type").select(
         "event_type",
         "n",
         "median_cents",
         F.abs(F.col("vc") - F.col("median_cents")).alias("dv"),
     )
+    mad = rank_select_percentiles(
+        dev.select("event_type", "dv"),
+        "event_type",
+        "dv",
+        [("mad", "(n + 1) DIV 2")],
+        bucket_width=1_000,
+        checkpoint=False,
+    ).select(
+        "event_type", F.col("mad").alias("mad_cents")
+    ).localCheckpoint()
     return med, dev, mad
 
 

@@ -857,14 +857,6 @@ def _pq_u_col() -> Column:
     return F.transform(quantize_int8(F.col("embedding")), lambda x: x + F.lit(127))
 
 
-# trained codebook per (sf_dir, geometry) — a codebook is O(K) plain
-# ints and data-deterministic, so one training pass serves every query
-# (and every bench repeat) in the process.  The same machinery trains
-# the PQ codebook (M=4 subspaces of 16 dims) and the IVF coarse
-# quantizer (M=1 "subspace" = the whole 64-dim vector).
-_PQ_CODEBOOK_CACHE: dict[tuple, dict[tuple[int, int], list[int]]] = {}
-
-
 def _pq_codebook_df(spark: SparkSession, cents) -> DataFrame:
     """One-row DataFrame carrying the whole codebook as a nested array
     column ``cb`` (cb[sub_id][j] = {cid, cent}); geometry inferred
@@ -924,7 +916,10 @@ def _pq_train(
     iters: int = PQ_ITERS,
 ) -> dict[tuple[int, int], list[int]]:
     """Train the PQ codebook: centroids keyed (sub_id, cid), values =
-    16 integer milli-unit components.  Memoized per sf_dir.
+    16 integer milli-unit components.  The same machinery trains the
+    PQ codebook (M=4 subspaces of 16 dims) and the IVF coarse
+    quantizer (M=1 "subspace" = the whole 64-dim vector); each call
+    trains afresh from the current embeddings table.
 
     Classic Spark k-means shape (what MLlib KMeans does): centroids are
     broadcast into a narrow map for assignment (via the one-row
@@ -935,9 +930,6 @@ def _pq_train(
     The collect is the codebook, never the data: O(K) regardless of
     corpus size, the same 'tiny driver action' class as the IVF probe
     pick above."""
-    cache_key = (sf_dir, m, subdim, k, iters)
-    if cache_key in _PQ_CODEBOOK_CACHE:
-        return _PQ_CODEBOOK_CACHE[cache_key]
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select("vec_id", _pq_u_col().alias("u"))
 
@@ -1031,7 +1023,6 @@ def _pq_train(
         for cell, comp in by_cell.items():
             nxt[cell] = [comp[p] for p in range(subdim)]
         cents = nxt
-    _PQ_CODEBOOK_CACHE[cache_key] = cents
     return cents
 
 
@@ -1404,8 +1395,8 @@ def q_vector_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     only. One scan assigns cells (zero-shuffle broadcast-codebook
     expression); the probe filter prunes the candidate set to
     ~n*probes/K before the TakeOrdered — the O(n/cells) scan shape IVF
-    exists for. Codebook shared with the PQ cache (memoized per
-    dataset+geometry)."""
+    exists for. The coarse codebook comes from the PQ trainer
+    (``_pq_train`` with M=1)."""
     cents = _pq_train(spark, sf_dir, m=1, subdim=DIM, k=IVF_K)
     emb = load_table(spark, sf_dir, "embeddings")
     qu = _u_row(emb.filter(F.col("vec_id") == 0).head()["embedding"])
@@ -1556,9 +1547,8 @@ def q_embed_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the scan touches ~n*probes/K candidates and reads 4 small ints per
 # candidate instead of 64 floats. (Residual encoding — PQ over the
 # vector minus its cell centroid — is the refinement; this composition
-# keeps the globally-trained PQ codebook so both codebooks are shared
-# verbatim with q_vector_ivf_trained / q_vector_pq_knn and stay
-# memoized.)
+# keeps the globally-trained PQ codebook so both codebooks are trained
+# exactly as q_vector_ivf_trained / q_vector_pq_knn train them.)
 
 _IVFPQ_I_BLOCKS, _IVFPQ_I_FINAL = _pq_sql(m=1, subdim=DIM, k=IVF_K, prefix="i_")
 _IVFPQ_P_BLOCKS, _IVFPQ_P_FINAL = _pq_sql(prefix="p_")
@@ -1642,7 +1632,7 @@ def q_vector_ivfpq_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     query to its {IVF_PROBES} nearest cells, and candidates inside
     those cells rank by PQ asymmetric distance — 4 integer table
     lookups per candidate, the production big-corpus ANN scan. Both
-    codebooks come from the shared memoized trainer, cell assignment
+    codebooks come from the shared trainer, cell assignment
     and PQ encoding are each a zero-shuffle broadcast-codebook
     expression over ONE scan, and the ADC table folds in as 32
     literal ints — so the whole search is scan -> filter ->

@@ -71,12 +71,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         mtime = os.stat(path).st_mtime_ns
     except OSError:
         mtime = None
+    # forced on EVERY call, cache hit or not: a caller may have moved
+    # the session tz since the plan was cached, and the cached plan
+    # renders timestamps in whatever tz the session has at execution
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name, mtime)
     cached = _TABLE_PLAN_CACHE.get(key)
     if cached is not None:
         return cached
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(path)
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))

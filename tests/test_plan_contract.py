@@ -80,7 +80,7 @@ BUDGETS = {
     # lead() neighbourhood + ONE agg shuffle — never a self-join
     "q_fuzzy_name_match_scaled": (2, 0, 0, False),
     # post-checkpoint entity aggregation: one groupBy exchange (the
-    # label rounds live behind the memoized localCheckpoint)
+    # label rounds run eagerly behind _er_propagate's localCheckpoint)
     "q_entity_resolution_scaled": (1, 0, 0, False),
     # survivorship: both row_number windows + the groupBy share the
     # entity_id exchange; the member join broadcasts the label frame
@@ -94,10 +94,10 @@ BUDGETS = {
     # two rank-select phases over a narrow pushed 2-col scan; the
     # tiny cut table joins back as a broadcast
     "q_length_band_filter": (10, 4, 0, True),
-    # bounded-verify corpus-wide twin: the candidate phase runs behind
-    # a memoized localCheckpoint (its 12-shuffle prefix plan stays
-    # pinned via q_text_ngram_jaccard_sharded below), so the RETURNED
-    # plan is checkpoint scan + array-verify joins only
+    # bounded-verify corpus-wide twin: the candidate phase runs eagerly
+    # into a parquet stage (its 12-shuffle prefix plan stays pinned via
+    # q_text_ngram_jaccard_sharded below), so the RETURNED plan is
+    # stage scan + array-verify joins only
     "q_text_ngram_jaccard_scaled": (5, 2, 0, True),
     # prefix-filtered exact similarity twins: df rank + prefix
     # self-join + pair distinct + array verify — every shuffle keyed

@@ -23,12 +23,6 @@ from scylla_pg_cdc_spark.registry import load_all  # noqa: E402
 from scylla_pg_cdc_spark.session import get_session  # noqa: E402
 
 
-def _counters(spark) -> tuple[int, int]:
-    tracker = spark.sparkContext.statusTracker()
-    jobs = tracker.getJobIdsForGroup(None)
-    return (len(jobs), 0)
-
-
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else os.environ.get(
         "SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"
