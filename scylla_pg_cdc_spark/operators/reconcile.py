@@ -34,6 +34,7 @@ from scylla_pg_cdc_spark.functions.comparisons import (
 )
 from scylla_pg_cdc_spark.registry import query
 from scylla_pg_cdc_spark.sources.tables import load_table
+from scylla_pg_cdc_spark.streaming import swap
 
 # ---------------------------------------------------------------------------
 # Library API (used by tests and by the checkable queries below)
@@ -296,36 +297,20 @@ def apply_repairs_to_parquet(
     """Materialize ``apply_repairs`` onto a parquet target in place.
 
     Parquet files are immutable, so the repaired image is written to a
-    staging directory first and swapped in afterwards (write-ahead then
-    rename — the repaired data is fully durable before the old target
-    is touched, mirroring the reference's execute-then-commit per
-    connection; on Delta/Iceberg this would be a single MERGE commit).
-
-    Crash recovery: the only window where the target path is absent is
-    between the two renames, and in that window both the backup (old
-    image) and the fully-written staging (new image) exist. On entry
-    this function heals that state by rolling the BACKWARD direction —
-    restoring the backup — so a crashed repair simply re-runs from the
-    old image (the repair merge is idempotent, so re-running is safe).
+    staging directory first and committed by ``streaming/swap.py``
+    (write-ahead then rename — the repaired data is fully durable
+    before the old target is touched, mirroring the reference's
+    execute-then-commit per connection; on Delta/Iceberg this would be
+    a single MERGE commit). A crashed repair is rolled back to the old
+    image on entry and simply re-runs (the repair merge is idempotent).
     """
-    import os
-    import shutil
-
-    staging = target_path.rstrip("/") + ".__repair_staging__"
-    backup = target_path.rstrip("/") + ".__repair_old__"
-    if not os.path.exists(target_path) and os.path.exists(backup):
-        # crashed mid-swap: restore the old image, drop the orphan
-        # staging (it will be rebuilt), and proceed normally
-        shutil.move(backup, target_path)
-    shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(backup, ignore_errors=True)
-
+    target_path = target_path.rstrip("/")
+    swap.committed(target_path)
+    staging = swap.stage(target_path)
     target = spark.read.parquet(target_path)
     repaired = apply_repairs(target, actions, source, keys)
     repaired.write.mode("overwrite").parquet(staging)
-    shutil.move(target_path, backup)
-    shutil.move(staging, target_path)
-    shutil.rmtree(backup, ignore_errors=True)
+    swap.promote(target_path, staging)
 
 
 # ---------------------------------------------------------------------------
@@ -722,17 +707,21 @@ def bucket_digests(
     df: DataFrame, keys: list[str], nbuckets: int
 ) -> DataFrame:
     """Per-bucket content state (bucket, n, dig): row count plus the
-    BIT_XOR fold of xxhash64 over the canonicalized non-key columns,
-    bucketed by key hash. XOR makes the digest not merely mergeable
-    but INVERTIBLE — XOR-ing a row's hash again removes it — which is
-    what lets CDC deltas maintain the digest incrementally
-    (``merge_digest_deltas``) instead of rescanning the table."""
+    BIT_XOR fold of xxhash64 over the canonicalized row — key columns
+    first, then the non-key columns — bucketed by key hash. XOR makes
+    the digest not merely mergeable but INVERTIBLE — XOR-ing a row's
+    hash again removes it — which is what lets CDC deltas maintain the
+    digest incrementally (``merge_digest_deltas``) instead of
+    rescanning the table. The key must be hashed with the values: over
+    values alone, two keys holding equal values cancel (h ^ h = 0) and
+    values swapped between two keys leave the bucket digest
+    unchanged."""
     kcols = [F.col(k) for k in keys]
-    val_cols = sorted(c for c in df.columns if c not in keys)
+    cols = list(keys) + sorted(c for c in df.columns if c not in keys)
     canon = F.concat_ws(
         "\x01", *[
             F.coalesce(F.col(c).cast("string"), F.lit("\x00"))
-            for c in val_cols
+            for c in cols
         ]
     )
     return (
@@ -798,8 +787,9 @@ def merkle_pruned_diff(
     level-2 (fine, nested: fine % coarse_n == coarse bucket) prunes
     further, and ``diff_datasets`` runs on the fine-flagged remainder
     alone. Returns the same (keys..., diff_type, diff_fields) frame as
-    the full diff minus its 'match' rows — proven equal in
-    tests/test_round5_ops.py.
+    the full diff minus its 'match' rows (checked in
+    tests/test_round5_ops.py, including same-bucket equal values and
+    values swapped between keys).
 
     This is the two-replica repair flow Cassandra/Dynamo run: exchange
     O(buckets) digests, ship rows only for differing ranges. The fine
@@ -808,7 +798,7 @@ def merkle_pruned_diff(
     mergeable), which is exactly how a real merkle tree builds
     bottom-up. Digests fold xxhash64 row hashes with BIT_XOR —
     commutative and overflow-free (a SUM of full-range 64-bit hashes
-    trips ANSI overflow), over the canonicalized row (all
+    trips ANSI overflow), over the canonicalized row (key and
     non-key columns cast to string with a null sentinel) — internal
     pruning state, so no cross-engine portability constraint; float
     tolerance therefore applies only at the row-diff stage, and a

@@ -23,6 +23,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from scylla_pg_cdc_spark.streaming import swap
+
 
 def _value_counts(batch: DataFrame) -> DataFrame:
     """(event_type, vc, cnt) exact cent-quantized value counts."""
@@ -91,30 +93,6 @@ def _ks(hist: DataFrame, cur: DataFrame) -> DataFrame:
     )
 
 
-def _committed_counts_dir(state_dir: str) -> str | None:
-    """The committed counts dir: the live dir, or the parked ``_prev``
-    if a crash hit between the swap's two renames."""
-    cdir = os.path.join(state_dir, "counts")
-    if os.path.isdir(cdir):
-        return cdir
-    if os.path.isdir(cdir + "_prev"):
-        return cdir + "_prev"
-    return None
-
-
-def committed_marker(state_dir: str) -> str | None:
-    """Epoch marker of the last COMMITTED fold (stored inside the
-    counts directory, so marker and state can never disagree)."""
-    d = _committed_counts_dir(state_dir)
-    if d is None:
-        return None
-    try:
-        with open(os.path.join(d, "_EPOCH")) as f:
-            return f.read().strip()
-    except OSError:
-        return None
-
-
 def monitor_epoch(
     spark: SparkSession, state_dir: str, batch: DataFrame,
     marker: str | None = None,
@@ -126,43 +104,24 @@ def monitor_epoch(
     bootstraps (no test — returned frame is empty) so the caller's
     quarantine rule never fires on an empty baseline.
 
-    Crash-idempotence (the marker protocol of
-    ``streaming/pipeline.py:fold_digests``): the epoch ``marker`` is
-    staged INSIDE the new counts directory and committed by the same
-    atomic rename as the counts, with the old state parked at
-    ``_prev`` until the promote completes — there is no window where
-    the marker says "folded" but the counts don't contain the epoch,
-    and none where the history exists only as an unlinked inode. A
+    Crash-idempotence: the counts dir is committed by
+    ``streaming/swap.py`` with the epoch ``marker`` inside it, so the
+    marker says "folded" exactly when the counts contain the epoch. A
     replay whose marker matches the committed one skips the fold and
     returns the PERSISTED report for that epoch (written under
     ``state_dir/report_epochs/<marker>`` before the swap, overwrite
     mode — recomputing it after the fold would KS the epoch against a
     baseline that already contains it). Callers that pass no marker
     (ad-hoc/batch use) get the unconditional fold."""
-    import shutil
-
     cdir = os.path.join(state_dir, "counts")
     rdir = os.path.join(state_dir, "report_epochs", marker or "adhoc")
-    if marker is not None and committed_marker(state_dir) == marker:
-        # replayed epoch: fold already committed; finish a possibly
-        # interrupted swap and hand back the persisted report
-        if not os.path.isdir(cdir):
-            os.rename(cdir + "_prev", cdir)
-        shutil.rmtree(cdir + "_prev", ignore_errors=True)
-        shutil.rmtree(cdir + "_next", ignore_errors=True)
+    if marker is not None and swap.marker(cdir) == marker:
         if os.path.isdir(rdir):
             return spark.read.parquet(rdir)
         return _ks(
             _value_counts(batch).limit(0), _value_counts(batch).limit(0)
         )
-    # finish an interrupted swap FIRST: after a crash between the
-    # swap's two renames, ``_prev`` is the ONLY committed dir, and the
-    # generic rmtree(back) below must never delete a _prev without a
-    # live sibling (a second crash in that window would lose the whole
-    # drift history and silently bootstrap — ADVICE r6)
-    if not os.path.isdir(cdir) and os.path.isdir(cdir + "_prev"):
-        os.rename(cdir + "_prev", cdir)
-    prev = _committed_counts_dir(state_dir)
+    prev = swap.committed(cdir)
     cur = _value_counts(batch)
     if prev is not None:
         hist = spark.read.parquet(prev)
@@ -173,11 +132,9 @@ def monitor_epoch(
             .agg(F.sum("cnt").alias("cnt"))
         )
     else:
-        hist = None
         out = _ks(cur.limit(0), cur.limit(0))
         merged = cur
-    nxt = cdir + "_next"
-    shutil.rmtree(nxt, ignore_errors=True)
+    nxt = swap.stage(cdir)
     merged.write.mode("overwrite").parquet(nxt)
     out = out.localCheckpoint()  # materialize BEFORE the swap below
     if marker is not None:
@@ -185,12 +142,5 @@ def monitor_epoch(
         # before the swap recomputes the identical frame from the
         # still-committed pre-fold history)
         out.write.mode("overwrite").parquet(rdir)
-        with open(os.path.join(nxt, "_EPOCH"), "w") as f:
-            f.write(marker)
-    back = cdir + "_prev"
-    shutil.rmtree(back, ignore_errors=True)
-    if os.path.isdir(cdir):
-        os.rename(cdir, back)
-    os.rename(nxt, cdir)
-    shutil.rmtree(back, ignore_errors=True)
+    swap.promote(cdir, nxt, marker)
     return out

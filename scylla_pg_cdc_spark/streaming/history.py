@@ -161,15 +161,11 @@ def compact_history(
 ) -> None:
     """Fold superseded interval versions away: rewrite the given
     buckets (default: all) keeping only each event's latest version —
-    the same amortized-compaction discipline as
-    ``lsm_state.compact_buckets_parallel`` (compacted files land in
-    the live bucket dirs first, superseded files unlink after; a crash
-    between the two leaves duplicates the idempotent max_by reducer
-    collapses on read)."""
-    import os
-    import shutil
-    import uuid
-
+    the same amortized, land-then-unlink compaction as
+    ``lsm_state.compact_buckets_parallel`` (a crash between the two
+    leaves duplicates the idempotent max_by reducer collapses on
+    read)."""
+    from scylla_pg_cdc_spark.streaming.lsm_state import _compact_in_place
     from scylla_pg_cdc_spark.streaming.pipeline import _bucket_dirs
 
     dirs = _bucket_dirs(history_dir)
@@ -178,40 +174,13 @@ def compact_history(
     buckets = [b for b in buckets if b in dirs]
     if not buckets:
         return
-    old_files = {
-        b: [
-            f
-            for f in os.listdir(os.path.join(history_dir, dirs[b]))
-            if f.endswith(".parquet") and not f.startswith(".")
-        ]
-        for b in buckets
-    }
-    df = spark.read.parquet(history_dir).filter(
-        F.col("__bucket").isin([int(b) for b in buckets])
-    )
     # __bucket re-derived (same modulus as the writer), not carried:
     # _latest_versions drops it
-    compacted = _latest_versions(df.drop("__bucket")).withColumn(
-        "__bucket", _state_bucket("key", n_buckets)
+    _compact_in_place(
+        spark,
+        history_dir,
+        buckets,
+        lambda df: _latest_versions(df.drop("__bucket")).withColumn(
+            "__bucket", _state_bucket("key", n_buckets)
+        ),
     )
-    staging = history_dir.rstrip("/") + "_compact/" + uuid.uuid4().hex[:8]
-    (
-        compacted.repartition(len(buckets), "__bucket")
-        .write.mode("overwrite")
-        .partitionBy("__bucket")
-        .parquet(staging)
-    )
-    for b, sub in _bucket_dirs(staging).items():
-        src = os.path.join(staging, sub)
-        dst = os.path.join(history_dir, dirs[b])
-        for i, part in enumerate(
-            f for f in os.listdir(src) if f.endswith(".parquet")
-        ):
-            os.rename(
-                os.path.join(src, part),
-                os.path.join(dst, f"compact-{uuid.uuid4().hex}-{i}.parquet"),
-            )
-    for b, files in old_files.items():
-        for f in files:
-            os.remove(os.path.join(history_dir, dirs[b], f))
-    shutil.rmtree(history_dir.rstrip("/") + "_compact", ignore_errors=True)

@@ -9,8 +9,8 @@ incoming embedding epoch is ASSIGNED to its nearest centroid by the
 same integer-quantized cosine, the maintenance report (routing,
 defections, exact centroid drift) is emitted BEFORE the fold, and the
 epoch folds in under the crash-idempotent marker protocol of
-``streaming/drift_state.py:monitor_epoch`` (stage into ``_next``,
-park at ``_prev``, two renames, marker inside the state dir).
+``streaming/drift_state.py:monitor_epoch`` (marker inside the state
+dir, committed by ``streaming/swap.py``).
 
 State size is K x DIM integers — independent of the stream length —
 and the evolving centroid is exactly the running mean of every vector
@@ -30,7 +30,6 @@ to the ANN index the LLM-pipeline brief requires.
 from __future__ import annotations
 
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -39,6 +38,7 @@ from scylla_pg_cdc_spark.operators.vector import (
     int_cos_micro,
     quantize_micro_array,
 )
+from scylla_pg_cdc_spark.streaming import swap
 
 # persisted lists schema: (label, i, s, n) — n duplicated across the
 # DIM i-rows of its label (one frame keeps the swap atomic)
@@ -148,26 +148,6 @@ def _report(state: DataFrame, epoch: DataFrame) -> DataFrame:
     )
 
 
-def _committed_dir(state_dir: str) -> str | None:
-    d = os.path.join(state_dir, "lists")
-    if os.path.isdir(d):
-        return d
-    if os.path.isdir(d + "_prev"):
-        return d + "_prev"
-    return None
-
-
-def committed_marker(state_dir: str) -> str | None:
-    d = _committed_dir(state_dir)
-    if d is None:
-        return None
-    try:
-        with open(os.path.join(d, "_EPOCH")) as f:
-            return f.read().strip()
-    except OSError:
-        return None
-
-
 def maintain_epoch(
     spark: SparkSession,
     state_dir: str,
@@ -178,10 +158,10 @@ def maintain_epoch(
     emit the per-list maintenance report, then fold the epoch in.
 
     First epoch bootstraps the lists from the batch's own labels
-    (the training epoch; empty report). Crash-idempotence follows
-    ``drift_state.monitor_epoch`` verbatim: report persisted under
-    ``report_epochs/<marker>`` before the swap, marker committed by
-    the same rename as the lists, replays return the persisted
+    (the training epoch; empty report). Crash-idempotence is
+    ``drift_state.monitor_epoch``'s: report persisted under
+    ``report_epochs/<marker>`` before the swap, marker committed with
+    the lists by ``streaming/swap.py``, replays return the persisted
     report without re-folding."""
     ldir = os.path.join(state_dir, "lists")
     rdir = os.path.join(state_dir, "report_epochs", marker or "adhoc")
@@ -190,17 +170,11 @@ def maintain_epoch(
         "label long, n_old long, n_assigned long,"
         " n_defected long, centroid_drift long",
     )
-    if marker is not None and committed_marker(state_dir) == marker:
-        if not os.path.isdir(ldir):
-            os.rename(ldir + "_prev", ldir)
-        shutil.rmtree(ldir + "_prev", ignore_errors=True)
-        shutil.rmtree(ldir + "_next", ignore_errors=True)
+    if marker is not None and swap.marker(ldir) == marker:
         if os.path.isdir(rdir):
             return spark.read.parquet(rdir)
         return empty
-    if not os.path.isdir(ldir) and os.path.isdir(ldir + "_prev"):
-        os.rename(ldir + "_prev", ldir)
-    prev = _committed_dir(state_dir)
+    prev = swap.committed(ldir)
     if prev is not None:
         state = spark.read.parquet(prev)
         assigned = assign_batch(batch, state)
@@ -235,20 +209,12 @@ def maintain_epoch(
     else:
         out = empty
         merged = _epoch_sums(batch, "label")
-    nxt = ldir + "_next"
-    shutil.rmtree(nxt, ignore_errors=True)
+    nxt = swap.stage(ldir)
     merged.select("label", "i", "s", "n").write.mode("overwrite").parquet(
         nxt
     )
     out = out.localCheckpoint()
     if marker is not None:
         out.write.mode("overwrite").parquet(rdir)
-        with open(os.path.join(nxt, "_EPOCH"), "w") as f:
-            f.write(marker)
-    back = ldir + "_prev"
-    shutil.rmtree(back, ignore_errors=True)
-    if os.path.isdir(ldir):
-        os.rename(ldir, back)
-    os.rename(nxt, ldir)
-    shutil.rmtree(back, ignore_errors=True)
+    swap.promote(ldir, nxt, marker)
     return out

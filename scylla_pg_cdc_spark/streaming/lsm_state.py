@@ -170,10 +170,8 @@ def compact_buckets_parallel(
     unscanned), compacts per key, and writes all compacted buckets via
     ``partitionBy`` — so all 32 local cores (or 1000 executors) work
     buckets concurrently instead of the inline per-bucket loop that
-    serializes one tiny job per bucket. Same crash discipline:
-    compacted files land in the live bucket dirs first, superseded
-    files unlink after; a crash between leaves duplicates the
-    idempotent latest-per-key reducer collapses.
+    serializes one tiny job per bucket. Same crash discipline
+    (``_compact_in_place``).
 
     ``__bucket`` is functional on ``key``, so it rides through the
     per-key max_by untouched and the writer re-partitions the output
@@ -183,12 +181,40 @@ def compact_buckets_parallel(
     files land in the live bucket dirs but before the superseded files
     unlink — the exact window where a live appender can race the
     compactor (see tests/test_lsm_state.py)."""
-    import shutil
-
     from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
 
     if not buckets:
         return
+    _compact_in_place(
+        spark,
+        state_dir,
+        buckets,
+        lambda df: compact_latest_agg(
+            df.withColumnRenamed(key, "key"), keep_deleted=True
+        )
+        .drop("__deleted")
+        .withColumnRenamed("key", key),
+        _before_unlink,
+    )
+
+
+def _compact_in_place(
+    spark: SparkSession,
+    state_dir: str,
+    buckets: list[int],
+    reduce,
+    _before_unlink=None,
+) -> None:
+    """Rewrite ``buckets`` of a ``__bucket``-partitioned dir to the rows
+    ``reduce`` keeps (``reduce`` maps the bucket-pruned frame to its
+    compacted form, ``__bucket`` included). Crash-safe by idempotence,
+    not renames: the compacted files land in the live bucket dirs
+    first, the superseded files unlink after — a crash between the two
+    leaves duplicates the idempotent reducer collapses on read. The
+    superseded files are listed BEFORE the read, so a file appended
+    meanwhile is never unlinked unread."""
+    import shutil
+
     dirs = _bucket_dirs(state_dir)
     old_files = {
         b: [
@@ -201,21 +227,18 @@ def compact_buckets_parallel(
     df = spark.read.parquet(state_dir).filter(
         F.col("__bucket").isin([int(b) for b in buckets])
     )
-    compacted = (
-        compact_latest_agg(df.withColumnRenamed(key, "key"), keep_deleted=True)
-        .drop("__deleted")
-        .withColumnRenamed("key", key)
-    )
-    staging = os.path.join(state_dir + "_compact", uuid.uuid4().hex[:8])
+    root = state_dir.rstrip("/") + "_compact"
+    staging = os.path.join(root, uuid.uuid4().hex[:8])
     (
-        compacted.repartition(len(buckets), "__bucket")
+        reduce(df)
+        .repartition(len(buckets), "__bucket")
         .write.mode("overwrite")
         .partitionBy("__bucket")
         .parquet(staging)
     )
-    for entry, sub in _bucket_dirs(staging).items():
+    for b, sub in _bucket_dirs(staging).items():
         src = os.path.join(staging, sub)
-        dst = os.path.join(state_dir, dirs[entry])
+        dst = os.path.join(state_dir, dirs[b])
         for i, p in enumerate(
             f for f in os.listdir(src) if f.endswith(".parquet")
         ):
@@ -228,7 +251,7 @@ def compact_buckets_parallel(
     for b, files in old_files.items():
         for f in files:
             os.remove(os.path.join(state_dir, dirs[b], f))
-    shutil.rmtree(state_dir + "_compact", ignore_errors=True)
+    shutil.rmtree(root, ignore_errors=True)
 
 
 def maintain(

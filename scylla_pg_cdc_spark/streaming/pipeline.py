@@ -54,6 +54,7 @@ from scylla_pg_cdc_spark.operators.cdc import (  # noqa: E402  (one
     TOMBSTONE_TYPE,  # definition of the envelope/tombstone contract —
     as_change_stream,  # the batch face the oracles verify)
 )
+from scylla_pg_cdc_spark.streaming import swap  # noqa: E402
 
 __all__ = ["TOMBSTONE_TYPE", "as_change_stream"]
 
@@ -163,11 +164,9 @@ def fold_mv_bucketed(
     and rewritten; the rest carry forward as hardlinks — the same
     O(delta)-not-O(table) discipline as ``merge_batch_into_state``,
     closing the incremental-MV analog of the reference's O(table)
-    REFRESH (S12). The epoch ``marker`` is staged INSIDE the new
-    layout and committed by the same atomic rename, so data and marker
+    REFRESH (S12). The epoch ``marker`` is committed with the new
+    layout by one ``streaming/swap.py`` promote, so data and marker
     can never disagree (idempotent under epoch replay)."""
-    import shutil
-
     from scylla_pg_cdc_spark.streaming.mv import apply_delta
 
     spark = removed.sparkSession
@@ -183,22 +182,21 @@ def fold_mv_bucketed(
         .distinct()
         .collect()
     )
-    prev_exists = os.path.exists(mv_dir)
+    prev_exists = swap.committed(mv_dir) is not None
     if not touched and prev_exists:
         # marker-only update: data is unchanged
-        tmp = os.path.join(mv_dir, "_EPOCH.tmp")
+        tmp = os.path.join(mv_dir, swap.MARKER + ".tmp")
         with open(tmp, "w") as f:
             f.write(marker)
-        os.replace(tmp, os.path.join(mv_dir, "_EPOCH"))
+        os.replace(tmp, os.path.join(mv_dir, swap.MARKER))
         return
+    next_dir = swap.stage(mv_dir)
     if not touched:
         # first epoch, empty delta: flat empty MV with schema (a later
         # non-empty fold migrates it to the bucketed layout)
         mv_new = apply_delta(None, removed, added, group_cols, sum_cols)
-        mv_new.repartition(1).write.mode("overwrite").parquet(mv_dir + "_next")
-        with open(os.path.join(mv_dir + "_next", "_EPOCH"), "w") as f:
-            f.write(marker)
-        os.rename(mv_dir + "_next", mv_dir)
+        mv_new.repartition(1).write.mode("overwrite").parquet(next_dir)
+        swap.promote(mv_dir, next_dir, marker)
         return
     prev_buckets = _bucket_dirs(mv_dir) if prev_exists else {}
     if not prev_exists:
@@ -220,17 +218,12 @@ def fold_mv_bucketed(
         carry = {}
 
     mv_new = apply_delta(mv_old, removed, added, group_cols, sum_cols)
-    next_dir = mv_dir + "_next"
-    shutil.rmtree(next_dir, ignore_errors=True)
     mv_new.withColumn("__bucket", bcol).repartition(
         max(len(touched), 1), "__bucket"
     ).write.mode("overwrite").partitionBy("__bucket").parquet(next_dir)
     if carry:
         _carry_buckets(mv_dir, next_dir, carry)
-    with open(os.path.join(next_dir, "_EPOCH"), "w") as f:
-        f.write(marker)
-    shutil.rmtree(mv_dir, ignore_errors=True)
-    os.rename(next_dir, mv_dir)
+    swap.promote(mv_dir, next_dir, marker)
 
 
 def fold_digests(
@@ -245,31 +238,21 @@ def fold_digests(
     ``merge_digest_deltas`` — XOR out before-images, XOR in
     after-images). The digest frame is only ``n_buckets`` rows, so a
     full rewrite per epoch is already O(delta)-dominated; the epoch
-    marker is staged inside the new directory and committed by the
-    same atomic rename (idempotent under epoch replay). This keeps
-    replica-comparison state (``q_merkle_diff`` shape) HOT as changes
-    stream in — reconciliation never rescans the target."""
-    import shutil
-
+    marker is committed with the new directory by one
+    ``streaming/swap.py`` promote (idempotent under epoch replay). This
+    keeps replica-comparison state (``q_merkle_diff`` shape) HOT as
+    changes stream in — reconciliation never rescans the target."""
     from scylla_pg_cdc_spark.operators.reconcile import merge_digest_deltas
 
     spark = removed.sparkSession
-    if os.path.exists(digest_dir):
+    if swap.committed(digest_dir) is not None:
         state = spark.read.parquet(digest_dir).select("bucket", "n", "dig")
     else:
         state = spark.createDataFrame([], "bucket long, n long, dig long")
     new = merge_digest_deltas(state, removed, added, ["key"], n_buckets)
-    next_dir = digest_dir + "_next"
-    shutil.rmtree(next_dir, ignore_errors=True)
+    next_dir = swap.stage(digest_dir)
     new.repartition(1).write.mode("overwrite").parquet(next_dir)
-    with open(os.path.join(next_dir, "_EPOCH"), "w") as f:
-        f.write(marker)
-    back = digest_dir + "_prev"
-    shutil.rmtree(back, ignore_errors=True)
-    if os.path.exists(digest_dir):
-        os.rename(digest_dir, back)
-    os.rename(next_dir, digest_dir)
-    shutil.rmtree(back, ignore_errors=True)
+    swap.promote(digest_dir, next_dir, marker)
 
 
 def merge_batch_into_state(
@@ -295,19 +278,15 @@ def merge_batch_into_state(
     aggregation (map-side partial combine) so duplicate-key CDC rows
     collapse before the shuffle.
 
-    Crash safety: the new state is fully assembled at ``<dir>_next``
-    (fresh files for touched buckets + hardlinks for the rest), then
-    swapped in with atomic directory renames (old state parked at
-    ``<dir>_prev`` until the swap completes); a reader/retry that
-    finds no ``state`` dir falls back to ``_prev``. "State dir
-    missing" is detected explicitly — any *other* read error is
-    re-raised rather than silently treated as first-epoch (which would
-    rebuild state from one batch and lose every compacted key). On an
-    object store the rename dance becomes a manifest/table-format
-    commit (Delta/Iceberg MERGE); the bucket layout and touched-set
-    pruning carry over unchanged."""
-    import shutil
-
+    Crash safety: the new state is staged whole (fresh files for
+    touched buckets + hardlinks for the rest) and committed by
+    ``streaming/swap.py``, which also rolls back an interrupted commit
+    before the state is read. "State dir missing" is detected
+    explicitly — any *other* read error is re-raised rather than
+    silently treated as first-epoch (which would rebuild state from
+    one batch and lose every compacted key). The bucket layout and
+    touched-set pruning carry over unchanged to a table-format commit
+    (Delta/Iceberg MERGE)."""
     from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
 
     spark = batch.sparkSession
@@ -320,7 +299,7 @@ def merge_batch_into_state(
         r["__bucket"]
         for r in batch_b.select("__bucket").distinct().collect()
     )
-    prev_dir = _existing_state_dir(state_dir)
+    prev_dir = swap.committed(state_dir)
     prev_buckets = _bucket_dirs(prev_dir) if prev_dir is not None else {}
 
     if not touched:
@@ -329,7 +308,9 @@ def merge_batch_into_state(
         # first epoch, empty batch: flat empty write (partitionBy on an
         # empty frame emits no schema-bearing files); the next non-empty
         # epoch migrates to the bucketed layout
-        batch_b.write.mode("overwrite").parquet(state_dir)
+        next_dir = swap.stage(state_dir)
+        batch_b.write.mode("overwrite").parquet(next_dir)
+        swap.promote(state_dir, next_dir)
         return
 
     if prev_dir is None:
@@ -361,31 +342,12 @@ def merge_batch_into_state(
         .select(*cols, "__bucket")
     )
 
-    next_dir = state_dir + "_next"
-    shutil.rmtree(next_dir, ignore_errors=True)
+    next_dir = swap.stage(state_dir)
     latest.repartition(max(len(touched), 1), "__bucket").write.mode(
         "overwrite"
     ).partitionBy("__bucket").parquet(next_dir)
     _carry_buckets(prev_dir, next_dir, carry)
-    # swap: park current, promote next, drop parked (renames are atomic
-    # on a local/posix fs; hardlinked inodes survive the parked dir's
-    # removal)
-    back_dir = state_dir + "_prev"
-    shutil.rmtree(back_dir, ignore_errors=True)
-    if os.path.exists(state_dir):
-        os.rename(state_dir, back_dir)
-    os.rename(next_dir, state_dir)
-    shutil.rmtree(back_dir, ignore_errors=True)
-
-
-def _existing_state_dir(state_dir: str) -> str | None:
-    """Current committed state: the live dir, or the parked ``_prev``
-    if a crash hit between the two swap renames."""
-    if os.path.exists(state_dir):
-        return state_dir
-    if os.path.exists(state_dir + "_prev"):
-        return state_dir + "_prev"
-    return None
+    swap.promote(state_dir, next_dir)
 
 
 def run_upsert_pipeline(
@@ -443,20 +405,6 @@ def run_upsert_pipeline(
         read_event_stream(spark, sf_dir, glob, max_files_per_trigger)
     )
 
-    def _mv_marker() -> str | None:
-        try:
-            with open(os.path.join(mv_dir, "_EPOCH")) as f:
-                return f.read().strip()
-        except OSError:
-            return None
-
-    def _digest_marker() -> str | None:
-        try:
-            with open(os.path.join(digest_dir, "_EPOCH")) as f:
-                return f.read().strip()
-        except OSError:
-            return None
-
     def _fold_mv(removed: DataFrame, added: DataFrame, marker: str) -> None:
         group_cols, sum_cols = mv_spec
         fold_mv_bucketed(
@@ -468,7 +416,7 @@ def run_upsert_pipeline(
         from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
         from scylla_pg_cdc_spark.streaming.mv import state_transition
 
-        prev_path = _existing_state_dir(state_dir)
+        prev_path = swap.committed(state_dir)
         if prev_path is None:
             prev_state = None
         elif state_mode == "lsm":
@@ -513,10 +461,9 @@ def run_upsert_pipeline(
                         drift_dir, "report", f"epoch_id={epoch_id}"
                     )
                 )
-            need_mv = mv_spec is not None and _mv_marker() != marker
-            need_dig = (
-                digest_buckets is not None and _digest_marker() != marker
-            )
+            mv_on, dig_on = mv_spec is not None, digest_buckets is not None
+            need_mv = mv_on and swap.marker(mv_dir) != marker
+            need_dig = dig_on and swap.marker(digest_dir) != marker
             if need_mv or need_dig:
                 # the marker makes each fold idempotent under epoch
                 # replay: a crash after a swap but before the
@@ -561,27 +508,17 @@ def run_upsert_pipeline(
                 # replay case delta was never computed, so compute it
                 # now: the merge failed, so the state is still the
                 # pre-merge image the delta is defined against)
-                if delta is None and (
-                    (mv_spec is not None and _mv_marker() == marker)
-                    or (
-                        digest_buckets is not None
-                        and _digest_marker() == marker
-                    )
-                ):
+                mv_landed = mv_on and swap.marker(mv_dir) == marker
+                dig_landed = dig_on and swap.marker(digest_dir) == marker
+                if delta is None and (mv_landed or dig_landed):
                     delta = compute_mv_delta(clean)
-                if delta is not None:
-                    if mv_spec is not None and _mv_marker() == marker:
-                        _fold_mv(
-                            delta[1], delta[0], marker + "-compensated"
-                        )
-                    if (
-                        digest_buckets is not None
-                        and _digest_marker() == marker
-                    ):
-                        fold_digests(
-                            digest_dir, delta[1], delta[0],
-                            marker + "-compensated", digest_buckets,
-                        )
+                if mv_landed:
+                    _fold_mv(delta[1], delta[0], marker + "-compensated")
+                if dig_landed:
+                    fold_digests(
+                        digest_dir, delta[1], delta[0],
+                        marker + "-compensated", digest_buckets,
+                    )
             finally:
                 if delta is not None:
                     delta[0].unpersist()

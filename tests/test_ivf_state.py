@@ -9,9 +9,9 @@ import math
 
 from pyspark.sql import functions as F
 
+from scylla_pg_cdc_spark.streaming import swap
 from scylla_pg_cdc_spark.streaming.ivf_state import (
     assign_batch,
-    committed_marker,
     maintain_epoch,
 )
 
@@ -92,7 +92,7 @@ def test_marker_replay_returns_persisted_report_without_refold(
     state1 = sorted(
         map(tuple, spark.read.parquet(sd + "/lists").collect())
     )
-    assert committed_marker(sd) == "e2"
+    assert swap.marker(sd + "/lists") == "e2"
     # replay: same marker, same report, state unchanged (no double fold)
     again = maintain_epoch(spark, sd, _batch(spark, e2), marker="e2")
     assert sorted(map(tuple, again.collect())) == rows1

@@ -270,8 +270,8 @@ def test_apply_repairs_to_parquet_swaps_in_place(spark, src, tgt, tmp_path):
     rediff = diff_datasets(src, spark.read.parquet(target_path), ["id"])
     assert {r["diff_type"] for r in rediff.collect()} == {"match"}
     # no staging/backup litter
-    assert not (tmp_path / "target.parquet.__repair_staging__").exists()
-    assert not (tmp_path / "target.parquet.__repair_old__").exists()
+    assert not (tmp_path / "target.parquet_next").exists()
+    assert not (tmp_path / "target.parquet_prev").exists()
 
 
 def test_apply_repairs_to_parquet_recovers_from_crashed_swap(
@@ -292,12 +292,12 @@ def test_apply_repairs_to_parquet_recovers_from_crashed_swap(
 
     # manufacture the crash window: old image parked at backup, a
     # half-baked staging dir, no live target
-    shutil.move(target_path, target_path + ".__repair_old__")
-    (tmp_path / "target.parquet.__repair_staging__").mkdir()
-    (tmp_path / "target.parquet.__repair_staging__" / "junk").write_text("x")
+    shutil.move(target_path, target_path + "_prev")
+    (tmp_path / "target.parquet_next").mkdir()
+    (tmp_path / "target.parquet_next" / "junk").write_text("x")
 
     apply_repairs_to_parquet(spark, target_path, actions, src, ["id"])
     rediff = diff_datasets(src, spark.read.parquet(target_path), ["id"])
     assert {r["diff_type"] for r in rediff.collect()} == {"match"}
-    assert not (tmp_path / "target.parquet.__repair_old__").exists()
-    assert not (tmp_path / "target.parquet.__repair_staging__").exists()
+    assert not (tmp_path / "target.parquet_prev").exists()
+    assert not (tmp_path / "target.parquet_next").exists()

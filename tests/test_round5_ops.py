@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from scylla_pg_cdc_spark.operators.analytics import q_event_autocorr
@@ -273,7 +274,27 @@ def test_kmv_mink_merges_losslessly(spark):
     assert merged == hashes[:k]
 
 
-def test_merkle_pruned_diff_equals_full_diff(spark):
+# four long keys sharing one fine bucket (pmod(xxhash64, 4096) = 553)
+# of merkle_pruned_diff's default levels: inside one bucket, equal
+# values under two keys and values swapped between two keys are the
+# shapes a digest over values alone cannot see
+_SAME_BUCKET_KEYS = (443, 829, 886, 1007)
+_SAME_BUCKET_SHAPES = {
+    "equal_values": ({443: "x", 829: "x"}, {443: "y", 829: "y"}),
+    "swapped_values": ({886: "p", 1007: "q"}, {886: "q", 1007: "p"}),
+}
+
+
+def _keyed_frame(spark, rows: dict):
+    return spark.createDataFrame(
+        sorted(rows.items()), "o_orderkey long, v string"
+    )
+
+
+@pytest.mark.parametrize(
+    "shape", ["perturbed_orders", *_SAME_BUCKET_SHAPES]
+)
+def test_merkle_pruned_diff_equals_full_diff(spark, shape):
     """The recursive digest drill must return EXACTLY the full
     row-level diff's non-match rows — pruning may waste a drill on a
     digest false positive but can never change the result."""
@@ -283,17 +304,29 @@ def test_merkle_pruned_diff_equals_full_diff(spark):
         merkle_pruned_diff,
     )
 
-    orders = load_table(spark, SF_SMALL, "orders")
-    tgt = _perturbed_target(spark, SF_SMALL)
+    if shape == "perturbed_orders":
+        src = load_table(spark, SF_SMALL, "orders")
+        tgt = _perturbed_target(spark, SF_SMALL)
+    else:
+        src_rows, tgt_rows = _SAME_BUCKET_SHAPES[shape]
+        src, tgt = _keyed_frame(spark, src_rows), _keyed_frame(spark, tgt_rows)
+        assert {
+            r[0]
+            for r in spark.createDataFrame(
+                [(k,) for k in _SAME_BUCKET_KEYS], "k long"
+            )
+            .select(F.pmod(F.xxhash64("k"), F.lit(4096)))
+            .collect()
+        } == {553}
     full = {
         (r["o_orderkey"], r["diff_type"])
-        for r in diff_datasets(orders, tgt, ["o_orderkey"])
+        for r in diff_datasets(src, tgt, ["o_orderkey"])
         .filter(F.col("diff_type") != "match")
         .collect()
     }
     pruned = {
         (r["o_orderkey"], r["diff_type"])
-        for r in merkle_pruned_diff(orders, tgt, ["o_orderkey"]).collect()
+        for r in merkle_pruned_diff(src, tgt, ["o_orderkey"]).collect()
     }
     assert pruned == full
     assert full, "perturbed target must produce discrepancies"
@@ -401,6 +434,27 @@ def test_incremental_digests_equal_recompute(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_digest_deltas_see_same_bucket_equal_and_swapped_values(spark):
+    """Folding an epoch that rewrites two keys' equal values and swaps
+    two keys' values inside ONE bucket must change the digest and land
+    on the target's recompute."""
+    from scylla_pg_cdc_spark.operators.reconcile import (
+        bucket_digests,
+        merge_digest_deltas,
+    )
+
+    src_rows, tgt_rows = {}, {}
+    for s_rows, t_rows in _SAME_BUCKET_SHAPES.values():
+        src_rows.update(s_rows)
+        tgt_rows.update(t_rows)
+    src, tgt = _keyed_frame(spark, src_rows), _keyed_frame(spark, tgt_rows)
+    state0 = bucket_digests(src, ["o_orderkey"], 1)
+    got = merge_digest_deltas(state0, src, tgt, ["o_orderkey"], 1).collect()
+    want = bucket_digests(tgt, ["o_orderkey"], 1).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert got[0]["dig"] != state0.collect()[0]["dig"]
 
 
 def test_streaming_epochs_maintain_digests(spark):

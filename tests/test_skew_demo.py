@@ -30,7 +30,10 @@ def test_aqe_skew_split_beats_naive(skew_results):
 
 
 def test_salted_join_beats_naive(skew_results):
-    assert skew_results["salted_sec"] < skew_results["naive_sec"] * 0.85, (
-        f"salted join ({skew_results['salted_sec']}s) should beat the "
-        f"straggler plan ({skew_results['naive_sec']}s)"
+    # salting's property is a shorter straggler, not a wall time on a
+    # given host: the join stage's max-task / median-task shuffle-read
+    # records must drop by the same 15% margin (n_salt=1 keeps ~5.7x)
+    assert skew_results["salted_skew"] < skew_results["naive_skew"] * 0.85, (
+        f"salted join straggler ratio ({skew_results['salted_skew']}) "
+        f"should beat the straggler plan's ({skew_results['naive_skew']})"
     )

@@ -163,34 +163,70 @@ def test_null_poison_rows_route_to_main_not_dropped(spark):
     assert main_n + dlq_n == rows.count()  # true partition
 
 
-def test_merge_state_survives_lost_state_dir(spark, tmp_path):
-    """Crash between swap renames: state at _prev only must still be
-    found; an unreadable-but-present dir must raise, not silently
-    rebuild from one batch."""
+@pytest.mark.parametrize(
+    "target, crashes",
+    [("state", 1), ("state", 2), ("mv", 1), ("digests", 1)],
+    ids=["state", "state_double_crash", "mv", "digests"],
+)
+def test_merge_state_survives_lost_state_dir(
+    spark, tmp_path, monkeypatch, target, crashes
+):
+    """A crash inside an epoch's commit (the rename that promotes the
+    staged dir raises), then the same call replayed as the pipeline's
+    epoch retry makes it, must leave both epochs committed — never the
+    replayed epoch's delta alone. ``state_double_crash`` crashes the
+    replay's own commit too (the ADVICE r6 window)."""
     import os
 
+    from scylla_pg_cdc_spark.operators.reconcile import bucket_digests
     from scylla_pg_cdc_spark.streaming.pipeline import (
-        _existing_state_dir,
+        fold_digests,
+        fold_mv_bucketed,
         merge_batch_into_state,
     )
 
-    d = str(tmp_path / "state")
-    batch1 = spark.createDataFrame(
-        [(1, 100, "UPSERT", "t", 1.0, "{}", 10)],
-        "event_id long, key long, op string, event_type string, "
-        "value double, props string, commit_ms long",
-    )
-    merge_batch_into_state(batch1, d)
-    assert _existing_state_dir(d) == d
-    # simulate crash after parking: state -> _prev, no live dir
-    os.rename(d, d + "_prev")
-    assert _existing_state_dir(d) == d + "_prev"
-    batch2 = batch1.withColumn("event_id", batch1.event_id + 1).withColumn(
-        "key", batch1.key + 1
-    )
-    merge_batch_into_state(batch2, d)
-    keys = {r["key"] for r in spark.read.parquet(d).collect()}
-    assert keys == {100, 101}  # prior state recovered from _prev
+    def changes(keys):
+        return spark.createDataFrame(
+            [(k, k, "UPSERT", "t", float(k), "{}", 10) for k in keys],
+            "event_id long, key long, op string, event_type string, "
+            "value double, props string, commit_ms long",
+        )
+
+    d = str(tmp_path / target)
+    none = changes([])
+
+    def fold(rows, marker):
+        if target == "state":
+            merge_batch_into_state(rows, d)
+        elif target == "mv":
+            fold_mv_bucketed(d, none, rows, ["key"], ["value"], marker)
+        else:
+            fold_digests(d, none, rows, marker, 8)
+
+    e0, e1 = changes(range(100, 130)), changes(range(130, 136))
+    fold(e0, "epoch-0")
+    rename, left = os.rename, [crashes]
+
+    def crashing_rename(src, dst):
+        if src == d + "_next" and left[0]:
+            left[0] -= 1
+            raise OSError("injected crash before promote")
+        rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", crashing_rename)
+    for _ in range(crashes):
+        with pytest.raises(OSError, match="injected crash"):
+            fold(e1, "epoch-1")
+    fold(e1, "epoch-1")
+    got = spark.read.parquet(d)
+    if target == "digests":
+        want = bucket_digests(e0.unionByName(e1), ["key"], 8)
+        cols = ["bucket", "n", "dig"]
+        assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+            map(tuple, want.select(cols).collect())
+        )
+    else:
+        assert {r["key"] for r in got.collect()} == set(range(100, 136))
 
 
 def test_multi_epoch_pipeline_equals_single_batch(spark, tmp_path):
@@ -561,10 +597,8 @@ def test_monitor_epoch_marker_replay_does_not_refold(spark, tmp_path):
     import os
 
     from scylla_pg_cdc_spark.sources.tables import load_table
-    from scylla_pg_cdc_spark.streaming.drift_state import (
-        committed_marker,
-        monitor_epoch,
-    )
+    from scylla_pg_cdc_spark.streaming import swap
+    from scylla_pg_cdc_spark.streaming.drift_state import monitor_epoch
 
     events = load_table(spark, SF_SMALL, "events")
     state = str(tmp_path / "drift")
@@ -579,7 +613,7 @@ def test_monitor_epoch_marker_replay_does_not_refold(spark, tmp_path):
         (r["event_type"], r["vc"], r["cnt"])
         for r in spark.read.parquet(os.path.join(state, "counts")).collect()
     )
-    assert committed_marker(state) == "epoch-1"
+    assert swap.marker(os.path.join(state, "counts")) == "epoch-1"
     # replay epoch-1 (caller crashed before its checkpoint committed)
     rep1_replay = sorted(
         (r["event_type"], r["n_hist"], r["n_epoch"], r["ks_ppm"])

@@ -15,7 +15,9 @@ same join three ways:
 
 Broadcast is disabled throughout: at 100 TB the dim side of a skewed
 join often exceeds the broadcast budget, which is exactly when skew
-bites. Run as a script to print one JSON line for SCALE.md; the
+bites. Each run also records its join stage's straggler ratio: the
+max-task over the median-task shuffle-read records, read from Spark's
+status store. Run as a script to print one JSON line for SCALE.md; the
 pytest face (tests/test_skew_demo.py) asserts mitigation beats the
 straggler with a safety margin and that all three results agree.
 """
@@ -49,13 +51,52 @@ def dim_table(spark: SparkSession, n_dim: int) -> DataFrame:
     )
 
 
-def _run(df: DataFrame) -> tuple[float, int]:
+def _stages(spark: SparkSession) -> list:
+    """Every stage in the application status store (the JVM
+    ``AppStatusStore``; it exists with the UI disabled)."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store = jsc.statusStore()
+    defaults = [
+        getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)
+    ]
+    st = store.stageList(None, *defaults)
+    return [st.apply(i) for i in range(st.size())]
+
+
+def _straggler_ratio(spark: SparkSession, before: set) -> float:
+    """Max-task over median-task shuffle-read records of the join stage:
+    the stage, among those run since ``before``, that reads the most
+    shuffled records (the join reads both inputs; the final aggregate
+    reads only 16-group partials)."""
+    new = [
+        s for s in _stages(spark)
+        if (s.stageId(), s.attemptId()) not in before
+        and s.status().toString() == "COMPLETE"
+    ]
+    join = max(new, key=lambda s: s.shuffleReadRecords())
+    tasks = spark.sparkContext._jsc.sc().statusStore().taskList(
+        join.stageId(), join.attemptId(), 1 << 30
+    )
+    recs = sorted(
+        t.taskMetrics().get().shuffleReadMetrics().recordsRead()
+        for t in (tasks.apply(i) for i in range(tasks.size()))
+        if t.taskMetrics().isDefined()
+    )
+    # lower median: with an even task count the upper one can be the max
+    return recs[-1] / max(recs[(len(recs) - 1) // 2], 1)
+
+
+def _run(df: DataFrame) -> tuple[float, int, float]:
+    spark = df.sparkSession
+    before = {(s.stageId(), s.attemptId()) for s in _stages(spark)}
     t0 = time.time()
     agg = df.groupBy("grp").agg(
         F.count(F.lit(1)).alias("n"), F.sum("v").alias("sv")
     )
     rows = agg.collect()  # tiny: 16 groups
-    return time.time() - t0, sum(r["n"] for r in rows)
+    t = time.time() - t0
+    return t, sum(r["n"] for r in rows), _straggler_ratio(spark, before)
 
 
 def run_skew_comparison(
@@ -94,17 +135,18 @@ def run_skew_comparison(
         conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4MB")
 
         conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        t, n = _run(fact.join(dim, "key"))
+        t, n, skew = _run(fact.join(dim, "key"))
         out["naive_sec"], out["rows"] = round(t, 3), n
+        out["naive_skew"] = round(skew, 3)
 
         conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        t, n2 = _run(fact.join(dim, "key"))
+        t, n2, _ = _run(fact.join(dim, "key"))
         out["aqe_sec"] = round(t, 3)
         assert n2 == n
 
         conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
-        t, n3 = _run(salted_join(fact, dim, "key", n_salt=n_salt))
-        out["salted_sec"] = round(t, 3)
+        t, n3, skew = _run(salted_join(fact, dim, "key", n_salt=n_salt))
+        out["salted_sec"], out["salted_skew"] = round(t, 3), round(skew, 3)
         assert n3 == n
     finally:
         for k, v in saved.items():
