@@ -810,8 +810,9 @@ def q_cdc_key_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys whose LAST op is a delete (dead at compaction), and the
     redundant rows upsert compaction removes (events - keys) — the
     report that prices compaction before running it (a band-10 tail
-    means hot keys dominate the state; ``redundant_events`` IS the
-    LSM compactor's win, cf. `streaming/lsm_state.py`). The
+    means hot keys dominate the state; ``redundant_events`` is what
+    the per-epoch state merge, `streaming/pipeline.py:
+    merge_batch_into_state`, folds away). The
     last-writer pick uses the same (commit_ms, event_id) total order
     as ``compact_latest``; the DuckDB oracle expresses it as
     ROW_NUMBER() OVER (ORDER BY commit_ms DESC, event_id DESC) with

@@ -34,7 +34,7 @@ TABLE_NAMES = (
 DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 
 
-# Table PLAN cache: (applicationId, sf_dir, table, file mtime) -> the
+# Table PLAN cache: (session, sf_dir, table, max leaf mtime) -> the
 # unexecuted DataFrame. This memoizes METADATA ONLY — the logical plan
 # whose construction costs ~85 ms of py4j + file listing + parquet
 # footer schema read per call (measured r12; ~1.7 load_table calls per
@@ -42,11 +42,33 @@ DIM_TABLES = frozenset({"region", "nation", "supplier", "part", "customer"})
 # re-listing immutable input tables). It is the same class of caching
 # the Spark file index does per-relation (guide §6,
 # `filesourcePartitionFileCacheSize`): every action on the returned
-# frame still scans parquet and recomputes results from scratch. The
-# mtime key (ns resolution) invalidates the entry if a test overwrites
-# a table in place; growth is bounded by #sessions x #sf_dirs x 10
-# tables.
+# frame still scans parquet and recomputes results from scratch.
+# The key holds the session object, not the applicationId: a frame runs
+# under the session that built it, and a sibling ``newSession()``
+# shares the applicationId but not the SQL conf (time zone). The mtime
+# is the newest over the table path and everything under it (ns
+# resolution): a part file rewritten in place leaves its directory's
+# mtime unchanged, and a stale listing keeps the old byte lengths.
+# Growth is bounded by #sessions x #sf_dirs x 10 tables.
 _TABLE_PLAN_CACHE: dict[tuple, DataFrame] = {}
+
+
+def _max_leaf_mtime(path: str) -> int | None:
+    """Newest mtime (ns) of ``path`` and, for a directory, everything
+    under it; None when the path does not exist."""
+    try:
+        newest = os.stat(path).st_mtime_ns
+    except OSError:
+        return None
+    for root, dirs, files in os.walk(path):
+        for entry in dirs + files:
+            try:
+                newest = max(
+                    newest, os.stat(os.path.join(root, entry)).st_mtime_ns
+                )
+            except OSError:
+                pass
+    return newest
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -67,16 +89,13 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     "naive timestamps are UTC" rule (`src/reconciliation/comparer.py:214-218`).
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    try:
-        mtime = os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
+    mtime = _max_leaf_mtime(path)
     # forced on EVERY call, cache hit or not: a caller may have moved
     # the session tz since the plan was cached, and the cached plan
     # renders timestamps in whatever tz the session has at execution
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name, mtime)
+    key = (spark, os.path.abspath(sf_dir), name, mtime)
     cached = _TABLE_PLAN_CACHE.get(key)
     if cached is not None:
         return cached

@@ -31,8 +31,8 @@ Scale: per epoch the cost is O(batch) hashing + a bucket-keyed join
 against state partitioned BY BUCKET PREFIX, so a 100 TB corpus's
 state is touched only on matching buckets; the exact-confirm join is
 bounded by LSH candidates. State grows with the ADMITTED corpus only;
-epoch subdirectories are append-units a background job can compact
-exactly like the LSM state (`streaming/lsm_state.py`). The 9/10
+epoch subdirectories are append-units a background job compacts
+(``compact_dedup_state``, `tools/compact_state.py`). The 9/10
 token-Jaccard confirm matches the batch query.
 
 Determinism caveat (documented, also true of any parallel greedy
@@ -274,9 +274,7 @@ def maybe_compact_dedup_state(
     spark: SparkSession, state_dir: str, epoch_threshold: int = 8
 ) -> dict:
     """Cadenced compaction: run ``compact_dedup_state`` only once the
-    number of LIVE un-merged state parts reaches ``epoch_threshold`` —
-    the epoch-count analog of the LSM compactor's per-bucket file
-    threshold (`lsm_state.py:buckets_needing_compaction`). Keeps
+    number of LIVE un-merged state parts reaches ``epoch_threshold``. Keeps
     ``admit_epoch``'s read fan-in bounded at O(threshold) while
     amortizing the merge cost over that many epochs; cheap enough to
     call after EVERY committed epoch."""
@@ -358,8 +356,7 @@ def compact_dedup_state(
     """Merge the accumulated epoch subdirectories (and any previous
     compaction output) into ONE ``compacted-<gen>`` generation per
     state family — the background job that keeps ``admit_epoch``'s
-    per-epoch read fan-in O(1) instead of O(epochs), the dedup-state
-    analog of the LSM compactor (`streaming/lsm_state.py`).
+    per-epoch read fan-in O(1) instead of O(epochs).
 
     Safe beside a LIVE appender and under any crash point:
 

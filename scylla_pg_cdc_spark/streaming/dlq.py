@@ -32,13 +32,10 @@ def replay_dlq(
     state_dir: str,
     max_messages: int | None = None,
     dry_run: bool = True,
-    state_mode: str = "merge",
 ) -> dict[str, int]:
     """Re-apply DLQ messages to the target state in deterministic
     (commit_ms, event_id) order, optionally capped — dry-run by default
-    like the reference (`replay-dlq.sh:61-95`). ``state_mode`` matches
-    the pipeline that owns the state dir ('merge' or 'lsm'). Returns
-    counts."""
+    like the reference (`replay-dlq.sh:61-95`). Returns counts."""
     dlq = spark.read.parquet(dlq_dir)
     total = dlq.count()
     batch = dlq.orderBy("commit_ms", "event_id")
@@ -46,13 +43,9 @@ def replay_dlq(
         batch = batch.limit(max_messages)
     n_replay = batch.count()
     if not dry_run and n_replay > 0:
-        replayable = batch.drop("error_context", "epoch_id")
-        if state_mode == "lsm":
-            from scylla_pg_cdc_spark.streaming.lsm_state import maintain
-
-            maintain(replayable, state_dir)
-        else:
-            merge_batch_into_state(replayable, state_dir)
+        merge_batch_into_state(
+            batch.drop("error_context", "epoch_id"), state_dir
+        )
     return {
         "dlq_total": total,
         "replayed": 0 if dry_run else n_replay,

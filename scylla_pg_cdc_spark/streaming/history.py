@@ -7,8 +7,7 @@ maintains that history INCREMENTALLY under a change stream — the
 temporal-table upgrade a warehouse consumer wants from a CDC pipeline
 (query any past state, audit every transition).
 
-Discipline (same hash-bucket + append + merge-on-read layout as
-``lsm_state``):
+Discipline (hash-bucket + append + merge-on-read):
 
 - **merge_batch_into_history**: per epoch, re-window ONLY the keys the
   batch touches — read the touched buckets, keep rows of touched keys,
@@ -28,18 +27,23 @@ Discipline (same hash-bucket + append + merge-on-read layout as
   holds under ANY partitioning of events into epochs (property-tested).
 
 At 100 TB: appends are bounded by touched-key history; a compactor
-(``lsm_state.compact_buckets_parallel`` shape) folds superseded
-versions away amortized. On Delta/Iceberg the append+merge-on-read
-pair becomes MERGE INTO over the interval table.
+(``compact_history``: one bucket-parallel land-then-unlink job) folds
+superseded versions away amortized. On Delta/Iceberg the
+append+merge-on-read pair becomes MERGE INTO over the interval table.
 """
 
 from __future__ import annotations
+
+import os
+import shutil
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from scylla_pg_cdc_spark.streaming.pipeline import (
     STATE_BUCKETS,
+    _bucket_dirs,
     _state_bucket,
 )
 
@@ -57,8 +61,6 @@ _HIST_COLS = [
 
 
 def _exists(path: str) -> bool:
-    import os
-
     return os.path.isdir(path) and any(
         not e.startswith(".") for e in os.listdir(path)
     )
@@ -158,29 +160,64 @@ def compact_history(
     history_dir: str,
     buckets: list[int] | None = None,
     n_buckets: int = STATE_BUCKETS,
+    _before_unlink=None,
 ) -> None:
     """Fold superseded interval versions away: rewrite the given
-    buckets (default: all) keeping only each event's latest version —
-    the same amortized, land-then-unlink compaction as
-    ``lsm_state.compact_buckets_parallel`` (a crash between the two
-    leaves duplicates the idempotent max_by reducer collapses on
-    read)."""
-    from scylla_pg_cdc_spark.streaming.lsm_state import _compact_in_place
-    from scylla_pg_cdc_spark.streaming.pipeline import _bucket_dirs
+    buckets (default: all) keeping only each event's latest version,
+    in one bucket-parallel job (partition-pruned read, per-event
+    max_by, ``partitionBy`` write).
 
+    Crash-safe by idempotence, not renames: the compacted files land in
+    the live bucket dirs first and the superseded files unlink after,
+    so a crash between the two leaves duplicates the idempotent max_by
+    reducer collapses on read. The superseded files are listed BEFORE
+    the read, so a file appended meanwhile is never unlinked unread.
+
+    ``_before_unlink`` is a test seam: called after the compacted files
+    land but before the superseded ones unlink — the window where a
+    live appender races the compactor."""
     dirs = _bucket_dirs(history_dir)
     if buckets is None:
         buckets = sorted(dirs)
     buckets = [b for b in buckets if b in dirs]
     if not buckets:
         return
+    old_files = {
+        b: [
+            f
+            for f in os.listdir(os.path.join(history_dir, dirs[b]))
+            if f.endswith(".parquet") and not f.startswith(".")
+        ]
+        for b in buckets
+    }
+    df = spark.read.parquet(history_dir).filter(
+        F.col("__bucket").isin([int(b) for b in buckets])
+    )
+    root = history_dir.rstrip("/") + "_compact"
+    staging = os.path.join(root, uuid.uuid4().hex[:8])
     # __bucket re-derived (same modulus as the writer), not carried:
     # _latest_versions drops it
-    _compact_in_place(
-        spark,
-        history_dir,
-        buckets,
-        lambda df: _latest_versions(df.drop("__bucket")).withColumn(
-            "__bucket", _state_bucket("key", n_buckets)
-        ),
+    (
+        _latest_versions(df.drop("__bucket"))
+        .withColumn("__bucket", _state_bucket("key", n_buckets))
+        .repartition(len(buckets), "__bucket")
+        .write.mode("overwrite")
+        .partitionBy("__bucket")
+        .parquet(staging)
     )
+    for b, sub in _bucket_dirs(staging).items():
+        src = os.path.join(staging, sub)
+        dst = os.path.join(history_dir, dirs[b])
+        for i, p in enumerate(
+            f for f in os.listdir(src) if f.endswith(".parquet")
+        ):
+            os.rename(
+                os.path.join(src, p),
+                os.path.join(dst, f"compact-{uuid.uuid4().hex}-{i}.parquet"),
+            )
+    if _before_unlink is not None:
+        _before_unlink()
+    for b, files in old_files.items():
+        for f in files:
+            os.remove(os.path.join(history_dir, dirs[b], f))
+    shutil.rmtree(root, ignore_errors=True)

@@ -356,7 +356,6 @@ def run_upsert_pipeline(
     glob: str = "events.parquet", max_files_per_trigger: int | None = None,
     mv_spec: tuple[list[str], list[str]] | None = None,
     state_buckets: int = STATE_BUCKETS,
-    state_mode: str = "merge",
     digest_buckets: int | None = None,
     drift_monitor: bool = False,
 ) -> dict[str, str]:
@@ -385,15 +384,7 @@ def run_upsert_pipeline(
     ``drift_monitor=True`` additionally KS-tests each epoch's value
     distribution against the persisted history at ``work_dir/drift``
     BEFORE folding it in (``streaming/drift_state.py``), appending a
-    per-epoch report — the upstream-semantic-change tripwire.
-
-    ``state_mode``: ``merge`` (eager per-epoch compaction — cheap
-    reads) or ``lsm`` (O(batch) appends + amortized compaction via
-    ``streaming/lsm_state.py`` — write-heavy CDC firehose; read the
-    state through ``latest_state``, which compacts on read for this
-    mode)."""
-    if state_mode not in ("merge", "lsm"):
-        raise ValueError(f"unknown state_mode: {state_mode!r}")
+    per-epoch report — the upstream-semantic-change tripwire."""
     state_dir = os.path.join(work_dir, "state")
     dlq_dir = os.path.join(work_dir, "dlq")
     mv_dir = os.path.join(work_dir, "mv")
@@ -417,14 +408,9 @@ def run_upsert_pipeline(
         from scylla_pg_cdc_spark.streaming.mv import state_transition
 
         prev_path = swap.committed(state_dir)
-        if prev_path is None:
-            prev_state = None
-        elif state_mode == "lsm":
-            from scylla_pg_cdc_spark.streaming.lsm_state import read_latest
-
-            prev_state = read_latest(spark, prev_path)
-        else:
-            prev_state = spark.read.parquet(prev_path)
+        prev_state = (
+            None if prev_path is None else spark.read.parquet(prev_path)
+        )
         batch_latest = compact_latest_agg(batch_clean, keep_deleted=True).drop(
             "__deleted"
         )
@@ -476,15 +462,8 @@ def run_upsert_pipeline(
                 fold_digests(
                     digest_dir, delta[0], delta[1], marker, digest_buckets
                 )
-            if state_mode == "lsm":
-                from scylla_pg_cdc_spark.streaming.lsm_state import maintain
-
-                def _sink(b, d, n_buckets):
-                    maintain(b, d, n_buckets=n_buckets)
-            else:
-                _sink = merge_batch_into_state
             merge = with_retries(
-                _sink,
+                merge_batch_into_state,
                 max_retries=max_retries,
                 backoff_ms=backoff_ms,
             )
@@ -545,23 +524,15 @@ def run_upsert_pipeline(
 
 def latest_state(spark: SparkSession, state_dir: str) -> DataFrame:
     """Materialized target-table view: live rows only (tombstones
-    filtered — the `delete.enabled=true` view). Applies the
-    latest-per-key reduction unconditionally: a no-op on eagerly-merged
-    state (already one row per key) and the required merge-on-read for
-    ``state_mode='lsm'`` dirs — the reducer's idempotence makes one
-    reader serve both layouts. The ``__bucket`` partition column is an
-    internal layout detail and is hidden."""
-    from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
-
-    df = spark.read.parquet(state_dir)
-    if "__bucket" in df.columns:
-        df = df.drop("__bucket")
-    latest = (
-        compact_latest_agg(df, keep_deleted=True).drop("__deleted")
-        if "key" in df.columns
-        else df
+    filtered — the `delete.enabled=true` view). ``merge_batch_into_state``
+    keeps exactly one row per key, so this is a plain read with no
+    reduction. The ``__bucket`` partition column is an internal layout
+    detail and is hidden."""
+    return (
+        spark.read.parquet(state_dir)
+        .drop("__bucket")
+        .filter(F.col("op") != "DELETE")
     )
-    return latest.filter(F.col("op") != "DELETE")
 
 
 def run_windowed_rates(

@@ -115,3 +115,44 @@ def test_compact_history_preserves_view_and_bounds_files(spark, work_dir):
                 ]
             )
             assert n <= 2
+
+
+def test_append_inside_compaction_unlink_window(spark, work_dir):
+    """An epoch that lands AFTER the compactor listed its victim files
+    and read the data, but BEFORE it unlinked them, must survive
+    intact: the new files are not in the victim list, so the unlink
+    cannot touch them, and the merge-on-read folds them in. This is the
+    live-appender-beside-compactor race, pinned through the
+    ``_before_unlink`` seam. The same seam is the crash window: with
+    compacted and superseded files both on disk, the view is
+    unchanged."""
+    from scylla_pg_cdc_spark.streaming.history import compact_history
+
+    schema = (
+        "event_id long, key long, event_type string, value double,"
+        " props string, commit_ms long"
+    )
+
+    def change(lo, hi):
+        return spark.createDataFrame(
+            [
+                (i, i % 40, "click", float(i), "{}", 1_000 + (i * 7919) % 500)
+                for i in range(lo, hi)
+            ],
+            schema,
+        )
+
+    hist = work_dir + "/hist"
+    for e in range(4):
+        merge_batch_into_history(
+            change(50 * e, 50 * (e + 1)), hist, epoch=e, n_buckets=4
+        )
+
+    before = _got(spark, hist)
+
+    def racing_append():
+        assert _got(spark, hist) == before
+        merge_batch_into_history(change(200, 260), hist, epoch=4, n_buckets=4)
+
+    compact_history(spark, hist, n_buckets=4, _before_unlink=racing_append)
+    assert _got(spark, hist) == _batch_expected(change(0, 260))

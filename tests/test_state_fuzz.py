@@ -28,11 +28,12 @@ Machines covered, with their invariants:
   duplicate vec_ids in one batch are absorbed twice (sums are
   per-ROW, pinned); replay with the committed marker returns the
   persisted report without re-folding.
-- lsm_state.maintain: merge-on-read latest-per-key equals
-  compact_latest_agg over the full concatenated history at EVERY
-  epoch, under forced per-epoch compaction, with all-tombstone
-  epochs, replayed event_ids, NULL values/props, and a NULL key
-  (the NULL-key group is first-class, same as GROUP BY NULL).
+- pipeline.merge_batch_into_state: the raw state dir holds exactly one
+  row per key, and that row set equals compact_latest_agg over the
+  full concatenated history, at EVERY epoch — with an empty epoch,
+  all-tombstone epochs, replayed event_ids, NULL values/props, and a
+  NULL key (the NULL-key group is first-class, same as GROUP BY NULL).
+  ``latest_state`` is a plain filtered read because of this invariant.
 """
 
 from __future__ import annotations
@@ -48,7 +49,7 @@ from scylla_pg_cdc_spark.streaming.dedup_state import (
 )
 from scylla_pg_cdc_spark.streaming.drift_state import monitor_epoch
 from scylla_pg_cdc_spark.streaming.ivf_state import maintain_epoch
-from scylla_pg_cdc_spark.streaming.lsm_state import maintain, read_latest
+from scylla_pg_cdc_spark.streaming.pipeline import merge_batch_into_state
 
 # ------------------------------------------------------------- dedup
 
@@ -306,14 +307,14 @@ def test_ivf_hostile_epochs(spark, tmp_path):
     pd.testing.assert_frame_equal(before, _state_pdf(spark, root))
 
 
-# --------------------------------------------------------------- lsm
+# ------------------------------------------------------- keyed state
 
 _CDC_SCHEMA = (
     "event_id long, key long, op string, event_type string,"
     " value double, props string, commit_ms long"
 )
 
-_LSM_EPOCHS = [
+_KEYED_EPOCHS = [
     # e0: normal upserts
     [
         (1, 100, "UPSERT", "click", 1.0, "{}", 1000),
@@ -340,19 +341,21 @@ _LSM_EPOCHS = [
 ]
 
 
-def test_lsm_hostile_epochs_match_full_history_compaction(spark, tmp_path):
+def test_merge_state_hostile_epochs_match_full_history_compaction(
+    spark, tmp_path
+):
     from scylla_pg_cdc_spark.operators.cdc import compact_latest_agg
 
-    root = str(tmp_path / "lsm")
+    root = str(tmp_path / "state")
     history = []
-    for i, rows in enumerate(_LSM_EPOCHS):
+    for i, rows in enumerate(_KEYED_EPOCHS):
         batch = spark.createDataFrame(rows, _CDC_SCHEMA)
         history.extend(rows)
-        maintain(batch, root, n_buckets=4, file_threshold=1)
-        got = {
-            (r["key"], r["event_id"], r["op"], r["value"])
-            for r in read_latest(spark, root).collect()
-        }
+        merge_batch_into_state(batch, root, n_buckets=4)
+        raw = spark.read.parquet(root).collect()
+        keys = [r["key"] for r in raw]
+        assert len(keys) == len(set(keys)), f"epoch {i}: duplicate keys"
+        got = {(r["key"], r["event_id"], r["op"], r["value"]) for r in raw}
         want_df = compact_latest_agg(
             spark.createDataFrame(history, _CDC_SCHEMA), keep_deleted=True
         ).drop("__deleted")
@@ -360,10 +363,10 @@ def test_lsm_hostile_epochs_match_full_history_compaction(spark, tmp_path):
             (r["key"], r["event_id"], r["op"], r["value"])
             for r in want_df.collect()
         }
-        assert got == want, f"epoch {i}: merge-on-read diverged"
+        assert got == want, f"epoch {i}: state diverged from history"
     # NULL-key group: latest NULL-key row won
     final = {
-        r["key"]: r["event_id"] for r in read_latest(spark, root).collect()
+        r["key"]: r["event_id"] for r in spark.read.parquet(root).collect()
     }
     assert final[None] == 8
 

@@ -28,7 +28,6 @@ from scylla_pg_cdc_spark.streaming.pipeline import (  # noqa: E402
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    state_mode = os.environ.get("SPARK_GRAFT_STATE_MODE", "merge")
     spark = get_session("stream-bench")
     spark.sparkContext.setLogLevel("ERROR")
     from scylla_pg_cdc_spark.functions.metrics import ProgressListener
@@ -39,7 +38,7 @@ def main() -> None:
     work = tempfile.mkdtemp(prefix="stream_bench_")
     try:
         t0 = time.time()
-        out = run_upsert_pipeline(spark, sf_dir, work, state_mode=state_mode)
+        out = run_upsert_pipeline(spark, sf_dir, work)
         wall = time.time() - t0
         n_state = latest_state(spark, out["state"]).count()
         n_dlq = spark.read.parquet(out["dlq"]).count()
@@ -64,7 +63,6 @@ def main() -> None:
                 "n_batches": len(batch_rates),
                 "batch_rows_per_sec": [round(r, 1) for r in batch_rates],
                 "sf_dir": sf_dir,
-                "state_mode": state_mode,
             }
         )
     )

@@ -1,44 +1,21 @@
-"""Standalone background compactor for LSM-mode keyed state.
+"""Standalone background compactor for the near-dup admission state.
 
 At scale the compactor runs as its OWN job on its own schedule, not
 inline with the ingest epoch (the reference's analog: Postgres
 autovacuum running beside the sink's upsert transactions,
 `data-model.md:463-473`). This tool is that job:
 
-    python tools/compact_state.py <state_dir> [--threshold N] [--key K]
-        [--buckets 3,17,29] [--dry-run]
-    python tools/compact_state.py <state_dir> --dedup [--min-parts N]
+    python tools/compact_state.py <state_dir> [--min-parts N]
 
-- picks every bucket whose delta-file count exceeds ``--threshold``
-  (or exactly ``--buckets`` if given),
-- compacts them in ONE bucket-parallel Spark job
-  (``compact_buckets_parallel``: partition-pruned read, per-key
-  max_by reduce, partitionBy write — cores work buckets concurrently),
-- prints one JSON line: buckets compacted, files and bytes before and
-  after, wall seconds.
+It compacts the near-dup admission state (`streaming/dedup_state.py`):
+merges the accumulated per-epoch bucket/token subdirectories into one
+``compacted-<gen>`` generation behind an atomic manifest swap — safe
+beside the live admission pipeline (see ``compact_dedup_state``), keeps
+admit_epoch's read fan-in O(1) in epochs. Prints one JSON line: the
+merge result, files and bytes before and after, wall seconds.
 
-Safe to run WHILE the ingest keeps appending: appends only add files,
-the compactor only replaces the files it listed at start, and the
-latest-per-key reducer is idempotent — a row present in both a
-just-compacted file and a racing append collapses to one on read.
-
-``--dedup`` compacts the near-dup admission state instead
-(`streaming/dedup_state.py`): merges the accumulated per-epoch
-bucket/token subdirectories into one ``compacted-<gen>`` generation
-behind an atomic manifest swap — safe beside the live admission
-pipeline (see ``compact_dedup_state``), keeps admit_epoch's read
-fan-in O(1) in epochs.
-
-Measurement mode (NEXT r2 #3 — the amortization curve):
-
-    python tools/compact_state.py --measure [--epochs 60] [--keys 50000]
-        [--batch 2000] [--thresholds 2,4,8,16]
-
-simulates E epochs of uniformly-keyed appends per threshold and
-reports bytes-rewritten-per-epoch: write amplification vs read
-fan-in (files/bucket) as the threshold moves. The curve is the
-knob's spec sheet: low threshold ~= eager merge (rewrite often, read
-few files), high threshold ~= pure log (append-only, read many).
+The keyed CDC state needs no such job: ``merge_batch_into_state``
+rewrites the touched buckets to one row per key every epoch.
 """
 
 from __future__ import annotations
@@ -53,10 +30,8 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from scylla_pg_cdc_spark.session import get_session  # noqa: E402
-from scylla_pg_cdc_spark.streaming.lsm_state import (  # noqa: E402
-    append_epoch,
-    buckets_needing_compaction,
-    compact_buckets_parallel,
+from scylla_pg_cdc_spark.streaming.dedup_state import (  # noqa: E402
+    compact_dedup_state,
 )
 
 
@@ -72,10 +47,6 @@ def _bucket_stats(state_dir: str) -> dict[str, int]:
 
 
 def run_dedup(args: argparse.Namespace) -> dict:
-    from scylla_pg_cdc_spark.streaming.dedup_state import (
-        compact_dedup_state,
-    )
-
     spark = get_session("compact-dedup-state")
     spark.sparkContext.setLogLevel("ERROR")
     before = _bucket_stats(args.state_dir)
@@ -96,123 +67,11 @@ def run_dedup(args: argparse.Namespace) -> dict:
     }
 
 
-def run_once(args: argparse.Namespace) -> dict:
-    spark = get_session("compact-state")
-    spark.sparkContext.setLogLevel("ERROR")
-    if args.buckets:
-        todo = [int(b) for b in args.buckets.split(",")]
-    else:
-        todo = buckets_needing_compaction(args.state_dir, args.threshold)
-    before = _bucket_stats(args.state_dir)
-    t0 = time.time()
-    if not args.dry_run:
-        compact_buckets_parallel(spark, args.state_dir, todo, key=args.key)
-    after = _bucket_stats(args.state_dir)
-    return {
-        "mode": "compact",
-        "state_dir": args.state_dir,
-        "buckets": todo,
-        "dry_run": args.dry_run,
-        "files_before": before["files"],
-        "files_after": after["files"],
-        "bytes_before": before["bytes"],
-        "bytes_after": after["bytes"],
-        "sec": round(time.time() - t0, 2),
-    }
-
-
-def measure(args: argparse.Namespace) -> dict:
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    spark = get_session("compact-measure")
-    spark.sparkContext.setLogLevel("ERROR")
-    curves = {}
-    for thr in (int(t) for t in args.thresholds.split(",")):
-        root = tempfile.mkdtemp(prefix=f"lsm-curve-t{thr}-")
-        state = os.path.join(root, "state")
-        rewritten_total = 0
-        compactions = 0
-        for epoch in range(args.epochs):
-            batch = (
-                spark.range(args.batch)
-                .select(
-                    (F.col("id") + epoch * args.batch).alias("event_id"),
-                    F.concat(
-                        F.lit("k"),
-                        (
-                            F.xxhash64((F.col("id") + F.lit(epoch * 7919)))
-                            % args.keys
-                        ).cast("string"),
-                    ).alias("key"),
-                    F.lit("UPDATE").alias("op"),
-                    F.lit("orders").alias("event_type"),
-                    F.rand(seed=epoch).alias("value"),
-                    F.lit("{}").alias("props"),
-                    F.lit(1_000_000 + epoch).alias("commit_ms"),
-                )
-            )
-            append_epoch(batch, state, n_buckets=args.n_buckets)
-            todo = buckets_needing_compaction(state, thr)
-            if todo:
-                compact_buckets_parallel(spark, state, todo)
-                compactions += 1
-                # bytes rewritten this round = size of the compacted
-                # buckets' new files (each target bucket was fully
-                # rewritten to one file)
-                for b in todo:
-                    bdir = os.path.join(state, f"__bucket={b}")
-                    rewritten_total += sum(
-                        os.path.getsize(os.path.join(bdir, f))
-                        for f in os.listdir(bdir)
-                        if f.endswith(".parquet")
-                    )
-        final = _bucket_stats(state)
-        curves[str(thr)] = {
-            "epochs": args.epochs,
-            "compaction_rounds": compactions,
-            "bytes_rewritten_total": rewritten_total,
-            "bytes_rewritten_per_epoch": rewritten_total // args.epochs,
-            "final_files": final["files"],
-            "final_bytes": final["bytes"],
-            "max_files_per_bucket": thr + 1,
-        }
-        shutil.rmtree(root, ignore_errors=True)
-    return {
-        "mode": "measure",
-        "keys": args.keys,
-        "batch": args.batch,
-        "n_buckets": args.n_buckets,
-        "curves": curves,
-    }
-
-
 def main() -> None:
     p = argparse.ArgumentParser(description=__doc__)
-    p.add_argument("state_dir", nargs="?", help="LSM state directory")
-    p.add_argument("--threshold", type=int, default=8)
-    p.add_argument("--key", default="key")
-    p.add_argument("--buckets", help="explicit bucket list, e.g. 3,17,29")
-    p.add_argument("--dry-run", action="store_true")
-    p.add_argument("--dedup", action="store_true")
+    p.add_argument("state_dir", help="near-dup admission state directory")
     p.add_argument("--min-parts", type=int, default=2)
-    p.add_argument("--measure", action="store_true")
-    p.add_argument("--epochs", type=int, default=40)
-    p.add_argument("--keys", type=int, default=50_000)
-    p.add_argument("--batch", type=int, default=2_000)
-    p.add_argument("--n-buckets", type=int, default=16)
-    p.add_argument("--thresholds", default="2,4,8,16")
-    args = p.parse_args()
-    if args.measure:
-        print(json.dumps(measure(args)))
-    elif args.state_dir and args.dedup:
-        print(json.dumps(run_dedup(args)))
-    elif args.state_dir:
-        print(json.dumps(run_once(args)))
-    else:
-        p.error("state_dir required unless --measure")
+    print(json.dumps(run_dedup(p.parse_args())))
 
 
 if __name__ == "__main__":

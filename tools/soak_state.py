@@ -10,9 +10,9 @@ thousands of epochs; what must hold:
 - dedup state grows with the ADMITTED corpus only, and the cadenced
   compactor keeps the live part-count bounded at O(threshold) with
   amortized merge cost (not a per-epoch rewrite of everything);
-- LSM keyed state: appends stay O(batch); the per-bucket file
-  threshold bounds read fan-in; total bytes track the LIVE key set,
-  not the event count;
+- keyed CDC state (``merge_batch_into_state``): each epoch rewrites
+  only its touched buckets; total bytes and files track the LIVE key
+  set and the bucket count, not the event count;
 - drift / IVF state stay BOUNDED (distribution-support / K x DIM
   sized) no matter how many epochs fold in.
 
@@ -48,9 +48,9 @@ from scylla_pg_cdc_spark.streaming.dedup_state import (  # noqa: E402
 )
 from scylla_pg_cdc_spark.streaming.drift_state import monitor_epoch  # noqa: E402
 from scylla_pg_cdc_spark.streaming.ivf_state import maintain_epoch  # noqa: E402
-from scylla_pg_cdc_spark.streaming.lsm_state import (  # noqa: E402
-    maintain,
-    read_latest,
+from scylla_pg_cdc_spark.streaming.pipeline import (  # noqa: E402
+    latest_state,
+    merge_batch_into_state,
 )
 
 
@@ -111,10 +111,16 @@ def soak_dedup(spark, sf_dir: str, n_epochs: int, compact_every: int = 8):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def soak_lsm(spark, sf_dir: str, n_epochs: int, file_threshold: int = 8):
+def _files(path: str) -> int:
+    return sum(
+        f.endswith(".parquet") for _r, _d, fs in os.walk(path) for f in fs
+    )
+
+
+def soak_keyed(spark, sf_dir: str, n_epochs: int):
     from scylla_pg_cdc_spark.operators.cdc import as_change_stream
 
-    work = tempfile.mkdtemp(prefix="soak_lsm_")
+    work = tempfile.mkdtemp(prefix="soak_keyed_")
     state = os.path.join(work, "state")
     ev = as_change_stream(load_table(spark, sf_dir, "events"))
     detail = []
@@ -123,24 +129,21 @@ def soak_lsm(spark, sf_dir: str, n_epochs: int, file_threshold: int = 8):
         for i in range(n_epochs):
             batch = ev.filter(F.pmod(F.xxhash64("event_id"), n_epochs) == i)
             t0 = time.time()
-            compacted = maintain(
-                batch, state, file_threshold=file_threshold
-            )
+            merge_batch_into_state(batch, state)
             t1 = time.time()
             t_total += t1 - t0
             detail.append(
                 {
                     "epoch": i,
                     "epoch_s": round(t1 - t0, 2),
-                    "buckets_compacted": len(compacted),
+                    "state_files": _files(state),
                     "state_mb": round(_du(state) / 1e6, 2),
                 }
             )
-        n_live = read_latest(spark, state).count()
+        n_live = latest_state(spark, state).count()
         return {
-            "machine": "lsm_state",
+            "machine": "keyed_state",
             "epochs": n_epochs,
-            "file_threshold": file_threshold,
             "wall_s": round(t_total, 1),
             "live_keys": n_live,
             "final_state_mb": detail[-1]["state_mb"],
@@ -196,7 +199,7 @@ def main() -> None:
     n_epochs = int(sys.argv[2]) if len(sys.argv) > 2 else 50
     spark = get_session("soak-state")
     spark.sparkContext.setLogLevel("ERROR")
-    for fn in (soak_dedup, soak_lsm, soak_bounded):
+    for fn in (soak_dedup, soak_keyed, soak_bounded):
         out = fn(spark, sf_dir, n_epochs)
         detail = out.pop("detail", None)
         print(json.dumps(out))
